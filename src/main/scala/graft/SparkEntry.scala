@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{GraftConfig, HanaTypes}
+import graft.core.{GraftConfig, HanaTypes, SharedState}
 import graft.operators._
 import graft.sinks.AppendSink
 import graft.sources.{JdbcRoundtrip, Tables, TextSources}
@@ -36,87 +36,103 @@ object SparkEntry {
 
   private val tie = Seq("l_orderkey", "l_linenumber")
 
-  // ---- shared co-purchase edge CTE (the curation-kernel discipline) ----
+  // ---- shared co-purchase edge CTE ----
   // q_triangle_count, q_label_prop and q_kcore all analyze the SAME
   // canonical co-purchase graph; re-deriving the basket groupBy + pair
-  // expansion + co-count per lane tripled a multi-second build. Memoize
-  // the edge frame per (session, dir): built eagerly (localCheckpoint +
-  // count, so the lineage truncates while still owned by the builder) and
-  // pinned so the bench's between-query cleanup keeps the blocks. Bench
-  // attribution: q_triangle_count owns the build (memo reset before each
-  // of its timed iterations); the other lanes measure marginal work over
-  // a warm memo. At real scale this is "edge list materialized once, read
-  // by every graph job".
-  private val edgeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  // expansion + co-count per lane tripled a multi-second build. Memoized
+  // per (session, dir), built eagerly (localCheckpoint + count, so the
+  // lineage truncates while the build still holds the frame). At real scale
+  // this is "edge list materialized once, read by every graph job".
+  val CoPurchaseEdgesMemo = "co_purchase_edges"
 
-  def coPurchaseEdges(s: SparkSession, dir: String): DataFrame = {
-    val k = (s, dir)
-    val hit = edgeMemo.get(k)
-    if (hit != null) hit
-    else {
+  def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
+    SharedState.memo(CoPurchaseEdgesMemo, s, dir) {
       val ck = Graph.coOccurrenceEdges(Tables.lineitem(s, dir)
           .select(col("l_orderkey"), col("l_partkey")),
           "l_orderkey", "l_partkey")
         .localCheckpoint(false)
       ck.count()
-      graft.core.MemoPin.pin(ck)
-      val prev = edgeMemo.putIfAbsent(k, ck)
-      if (prev == null) ck
-      else { graft.core.MemoPin.unpin(ck); prev }
+      ck
     }
-  }
 
-  /** Bench hook: warm the edge memo untimed at suite start. */
-  def warmCoPurchaseEdges(s: SparkSession, dir: String): Unit =
-    coPurchaseEdges(s, dir): Unit
-
-  /** Bench hook: drop this session's edge memo so the owner lane pays the
-    * build on every timed iteration. */
-  def resetCoPurchaseEdges(s: SparkSession): Unit = {
-    val it = edgeMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == s) { graft.core.MemoPin.unpin(e.getValue); it.remove() }
-    }
-  }
-
-  // ---- shared embedding covariance (same discipline) ----
+  // ---- shared embedding covariance ----
   // q_cov_matrix IS the covariance; q_pca_project eigendecomposes the same
   // matrix. The d²/2 moment aggregate is the entire cost of both lanes at
   // scale (the result is 2080 rows for d=64), so compute it once per
-  // (session, dir): q_cov_matrix owns the build in the bench.
-  private val covMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  // (session, dir).
+  val EmbeddingCovMemo = "embedding_cov"
 
-  def embeddingCov(s: SparkSession, dir: String): DataFrame = {
-    val k = (s, dir)
-    val hit = covMemo.get(k)
-    if (hit != null) hit
-    else {
+  def embeddingCov(s: SparkSession, dir: String): DataFrame =
+    SharedState.memo(EmbeddingCovMemo, s, dir) {
       val ck = VectorOps.covarianceMatrix(Tables.embeddings(s, dir),
           "embedding")
         .localCheckpoint(false)
       ck.count()
-      graft.core.MemoPin.pin(ck)
-      val prev = covMemo.putIfAbsent(k, ck)
-      if (prev == null) ck
-      else { graft.core.MemoPin.unpin(ck); prev }
+      ck
     }
+
+  /** A memo shared across lanes, declared once: the lane that pays its
+    * build (the bench resets the memo before each of the owner's timed
+    * iterations), the lanes that read it, and the untimed warm-up that
+    * builds it exactly as the lanes key it (each warm calls the memoized
+    * operator, which builds the memo eagerly even where the frame it
+    * returns stays lazy). */
+  final case class SharedMemo(name: String, owner: String,
+                              consumers: Seq[String],
+                              warm: (SparkSession, String) => Unit) {
+    def lanes: Seq[String] = owner +: consumers
   }
 
-  /** Bench hook: warm the covariance memo untimed at suite start. */
-  def warmEmbeddingCov(s: SparkSession, dir: String): Unit =
-    embeddingCov(s, dir): Unit
+  /** Every cross-lane memo, in suite warm-up order. */
+  val sharedMemos: Seq[SharedMemo] = Seq(
+    SharedMemo(CurationPipeline.KernelMemo, "q_curation",
+      Seq("q_curation_v2", "q_curation_v3", "q_curation_v4",
+        "q_curation_v5", "q_curation_v6"),
+      (s, dir) => CurationPipeline.keptDocuments(s, dir).count(): Unit),
+    SharedMemo(CoPurchaseEdgesMemo, "q_triangle_count",
+      Seq("q_label_prop", "q_kcore"),
+      (s, dir) => coPurchaseEdges(s, dir): Unit),
+    SharedMemo(BpeTrainer.TrainMemo, "q_bpe_merges", Seq("q_bpe_apply"),
+      (s, dir) => BpeTrainer.mergesShared(Tables.documents(s, dir),
+        key = dir): Unit),
+    SharedMemo(EmbeddingCovMemo, "q_cov_matrix", Seq("q_pca_project"),
+      (s, dir) => embeddingCov(s, dir): Unit),
+    // q_vec_assign_new also trains a quantizer, but on its history SUBSET,
+    // deliberately outside the memo (see IvfIndex.assignNewBatch)
+    SharedMemo(IvfIndex.CoarseMemo, "q_vec_clusters",
+      Seq("q_sim_topk_ivf", "q_sim_topk_ivfpq", "q_sim_topk_ivfrpq",
+        "q_vec_rpq", "q_ivf_recall_report", "q_hard_negatives_ivf",
+        "q_dedup_semantic"),
+      (s, dir) => IvfIndex.assignments(Tables.embeddings(s, dir),
+        memoKey = Some(dir)): Unit),
+    SharedMemo(CurationPipeline.AdmissionMemo, "q_curation_incr",
+      Seq("q_admission_report"),
+      (s, dir) => CurationPipeline.incrementalAdmission(s, dir).count(): Unit),
+    SharedMemo(PqIndex.RawMemo, "q_vec_pq",
+      Seq("q_vec_adc", "q_sim_topk_ivfpq"),
+      (s, dir) => PqIndex.codes(Tables.embeddings(s, dir),
+        memoKey = Some(dir)): Unit),
+    SharedMemo(PqIndex.ResidualMemo, "q_vec_rpq", Seq("q_sim_topk_ivfrpq"),
+      (s, dir) => PqIndex.residualCodes(Tables.embeddings(s, dir),
+        coarseMemoKey = Some(dir)): Unit),
+    SharedMemo(Graph.CoStateMemo, "q_cf_similarity", Seq("q_cf_recommend"),
+      (s, dir) => Graph.itemSimilarity(cfBaskets(s, dir), "cust", "supp",
+        memoKey = Some(dir)): Unit),
+    SharedMemo(Profile.ProfileMemo, "q_table_profile",
+      Seq("q_table_profile_approx"),
+      (s, dir) => Profile.tableProfile(Tables.lineitem(s, dir),
+        memoKey = Some(s"$dir#lineitem")): Unit),
+    SharedMemo(NearDup.EditDistanceMemo, "q_dedup_editdist",
+      Seq("q_dedup_editdist_survivors"),
+      (s, dir) => NearDup.editDistancePairs(Tables.documents(s, dir),
+        memoKey = Some(dir)): Unit))
 
-  /** Bench hook: drop this session's covariance memo (owner q_cov_matrix). */
-  def resetEmbeddingCov(s: SparkSession): Unit = {
-    val it = covMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == s) { graft.core.MemoPin.unpin(e.getValue); it.remove() }
-    }
-  }
+  /** Customer -> supplier baskets, the input of both CF lanes. */
+  private def cfBaskets(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir).select("o_orderkey", "o_custkey")
+      .join(Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey"),
+        col("l_orderkey") === col("o_orderkey"))
+      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
@@ -825,24 +841,16 @@ object SparkEntry {
     "q_triangle_count" -> ((s, dir) =>
       Graph.triangleStats(coPurchaseEdges(s, dir), "item_a", "item_b")),
     // item-item collaborative filtering: suppliers similar by shared customers
-    "q_cf_similarity" -> ((s, dir) => {
-      val b = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-        .join(Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      Graph.itemSimilarity(b, "cust", "supp", memoKey = Some(dir))
-    }),
+    "q_cf_similarity" -> ((s, dir) =>
+      Graph.itemSimilarity(cfBaskets(s, dir), "cust", "supp",
+        memoKey = Some(dir))),
     // sequential-pattern mining: most-walked 3-step event-type paths
     "q_path_mining" -> ((s, dir) =>
       JsonOps.topEventPaths(Tables.events(s, dir))),
     // per-item "also bought" top-3 by cosine — itemSimilarity ranked per item
-    "q_cf_recommend" -> ((s, dir) => {
-      val b = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-        .join(Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      Graph.recommendations(b, "cust", "supp", memoKey = Some(dir))
-    }),
+    "q_cf_recommend" -> ((s, dir) =>
+      Graph.recommendations(cfBaskets(s, dir), "cust", "supp",
+        memoKey = Some(dir))),
     // CUSUM upward-shift detector per event type, exact 1/n_days units
     "q_cusum_daily" -> ((s, dir) =>
       Funnel.cusumDaily(Tables.events(s, dir))),

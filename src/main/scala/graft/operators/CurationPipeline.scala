@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.SharedState
 import graft.sources.Tables
 
 /** End-to-end training-data curation — the use-case the extension operators
@@ -28,85 +29,27 @@ object CurationPipeline {
   // The kernel (and the v3/v4-shared `clean` frame below) is re-derived by
   // every capstone that composes on top of it — v1..v5 in one bench process
   // would run it five times for an identical result. Memoize the lazily-
-  // checkpointed frame per (session, dir, phrases): each capstone's ORACLE
-  // row is unchanged (same deterministic rows), but the process pays the
-  // kernel once. Keyed on the session so test suites with their own
-  // sessions never see a frame from a stopped one. At real scale this is
-  // the "kernel output persisted to storage between stages" discipline.
-  /** RDD name marking a memoized frame's checkpoint blocks: the bench
-    * harness unpersists all persistent RDDs between queries (pinned blocks
-    * tax later queries) but must NOT drop these — a localCheckpoint has a
-    * truncated lineage, so losing its blocks is unrecoverable. */
-  val PinnedRddName = graft.core.MemoPin.PinnedRddName
+  // checkpointed frame per (session, dir, phrases, tag): each capstone's
+  // ORACLE row is unchanged (same deterministic rows), but the process pays
+  // the kernel once. At real scale this is the "kernel output persisted to
+  // storage between stages" discipline. The kernel, the clean frame and the
+  // admission run are separate memos so each resets on its own; the clean
+  // frame is separately checkpointed (truncated lineage, no dependency on
+  // the kernel's blocks).
+  val KernelMemo = "curation_kernel"
+  val CleanMemo = "curation_clean"
+  val AdmissionMemo = "curation_admission"
 
-  private val frameMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Seq[String], String), DataFrame]()
-  // NOT computeIfAbsent: capstone memo entries NEST (trainingManifest's
-  // build calls keptDocuments, itself memoized), and ConcurrentHashMap
-  // forbids recursive updates from inside a compute ("Recursive update",
-  // order-dependent — it only fires when the outer capstone runs before
-  // the kernel is cached). get/putIfAbsent tolerates the nesting; a
-  // concurrent duplicate build is benign (the frame is deterministic) and
-  // the loser's checkpoint blocks are dropped so they can't stay pinned.
-  private def memoFrame(spark: SparkSession, dir: String,
+  private def memoFrame(memo: String, spark: SparkSession, dir: String,
                         phrases: Seq[String], tag: String)
-                       (build: => DataFrame): DataFrame = {
-    val key = (spark, dir, phrases, tag)
-    val hit = frameMemo.get(key)
-    if (hit != null) hit
-    else {
-      val ck = build.localCheckpoint(false)
-      ck.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.setName(PinnedRddName)
-        case _ => ()
-      }
-      val prev = frameMemo.putIfAbsent(key, ck)
-      if (prev == null) ck
-      else {
-        ck.queryExecution.analyzed.foreach {
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            l.rdd.unpersist(false)
-          case _ => ()
-        }
-        prev
-      }
+                       (build: => DataFrame): DataFrame =
+    SharedState.memo(memo, spark, dir, phrases, tag) {
+      build.localCheckpoint(false)
     }
-  }
-
-  /** Bench-attribution hooks (round-9): the memo makes the KERNEL's cost
-    * land on whichever curation lane happens to run first (alphabetical
-    * accident — q_admission_report paid it while q_curation reported a
-    * sub-0.1 s memo hit). The bench warms the kernel once UNTIMED at suite
-    * start ([[warmKernel]]), then [[resetKernelMemo]] before each timed
-    * q_curation iteration, so q_curation owns the kernel build on every
-    * iteration (iter spread ~1) and every other lane measures its marginal
-    * work over a warm kernel. Only the "kept" entries reset — "clean" is a
-    * separately-checkpointed frame (truncated lineage, no dependency on the
-    * kept blocks) owned by the manifest lanes. */
-  def resetKernelMemo(spark: SparkSession): Unit = {
-    val it = frameMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == spark && e.getKey._4 == "kept") {
-        e.getValue.queryExecution.analyzed.foreach {
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            l.rdd.unpersist(false)
-          case _ => ()
-        }
-        it.remove()
-      }
-    }
-  }
-
-  /** Build + MATERIALIZE the kernel (localCheckpoint(false) is lazy — the
-    * blocks land on the first action), so later lanes hit a warm memo. */
-  def warmKernel(spark: SparkSession, dir: String): Unit =
-    keptDocuments(spark, dir).count(): Unit
 
   def keptDocuments(spark: SparkSession, dir: String,
                     blockPhrases: Seq[String] = Nil): DataFrame =
-    memoFrame(spark, dir, blockPhrases, "kept") {
+    memoFrame(KernelMemo, spark, dir, blockPhrases, "kept") {
       keptDocumentsUncached(spark, dir, blockPhrases)
     }
 
@@ -228,7 +171,7 @@ object CurationPipeline {
     // the containment+decontamination survivor frame is identical for every
     // capstone sharing `blockPhrases` (v3/v4 differ only downstream, at the
     // scrub stage) — memoized like the kernel
-    val clean = memoFrame(spark, dir, blockPhrases, "clean") {
+    val clean = memoFrame(CleanMemo, spark, dir, blockPhrases, "clean") {
       // kernel consumed by two chains (containment pairs + anti-join left
       // side): materialize once, lazily
       val keptDocs = keptDocuments(spark, dir, blockPhrases)
@@ -302,46 +245,24 @@ object CurationPipeline {
     *
     * Fixture split: batch = doc_id % 5 == 0 (the q_dedup_nearhist split).
     * Output: (doc_id, stage) for every batch doc. */
-  // round-13: q_curation_incr (the funnel) and q_admission_report (the
-  // per-stage dashboard over the SAME funnel run) each ran the whole
-  // admission funnel — an expensive build (quality gates + exact-vs-history
-  // + minhash near-dup) with a tiny per-doc (doc_id, stage) output, i.e.
-  // exactly the build-heavy/output-light ratio where the shared-frame memo
-  // pays (the ER entity-map memo, with the opposite ratio, measured as a
-  // wash and was not shipped). Owner: q_curation_incr, same reset/warm
-  // attribution as the curation kernel. At real scale the admission run IS
-  // persisted once per ingest batch; the report reads it.
+  // The funnel lane and the per-stage dashboard over the SAME funnel run
+  // each ran the whole admission funnel — an expensive build (quality
+  // gates + exact-vs-history + minhash near-dup) with a tiny per-doc
+  // (doc_id, stage) output, i.e. exactly the build-heavy/output-light ratio
+  // where the shared-frame memo pays (the ER entity-map memo, with the
+  // opposite ratio, measured as a wash and was not shipped). At real scale
+  // the admission run IS persisted once per ingest batch; the report reads
+  // it.
   def incrementalAdmission(spark: SparkSession, dir: String,
                            blockPhrases: Seq[String] = Seq("slow join"),
                            threshold: Double = 0.5): DataFrame =
-    memoFrame(spark, dir, blockPhrases, s"admission:$threshold") {
+    memoFrame(AdmissionMemo, spark, dir, blockPhrases,
+      s"admission:$threshold") {
       val docs = Tables.documents(spark, dir)
       admitBatch(docs.filter(pmod(col("doc_id"), lit(5)) === 0),
         docs.filter(pmod(col("doc_id"), lit(5)) =!= 0),
         blockPhrases, threshold)
     }
-
-  /** Bench hook: materialize the admission funnel untimed (owner
-    * q_curation_incr rebuilds it per timed iteration). */
-  def warmAdmission(spark: SparkSession, dir: String): Unit =
-    incrementalAdmission(spark, dir).count(): Unit
-
-  /** Drop this session's admission-funnel memo entries and their pinned
-    * blocks. */
-  def resetAdmissionMemo(spark: SparkSession): Unit = {
-    val it = frameMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == spark && e.getKey._4.startsWith("admission:")) {
-        e.getValue.queryExecution.analyzed.foreach {
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            l.rdd.unpersist(false)
-          case _ => ()
-        }
-        it.remove()
-      }
-    }
-  }
 
   /** The funnel over explicit batch/history frames (each needs doc_id +
     * text; the fixture split above is just one instantiation). */

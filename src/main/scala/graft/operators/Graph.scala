@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.SharedState
+
 /** Graph-shaped analytics over the star schema: market-basket association
   * mining (a-priori pair counting) and PageRank (power iteration). The
   * reference delegates all relational compute to HANA/BigQuery (SURVEY.md
@@ -282,33 +284,29 @@ object Graph {
       .groupBy("item_a", "item_b").agg(count(lit(1)).as("co_cnt"))
       .filter(col("co_cnt") >= minCo)
 
-  // ---- shared CF co-occurrence state (the BpeTrainer.trainMemo
-  // discipline) ----
+  // ---- shared CF co-occurrence state ----
   // q_cf_similarity and q_cf_recommend build the IDENTICAL model from the
   // same basket relation: the per-item count table and the min-support
   // co-occurrence pair table — the expensive half of both lanes (basket
   // groupBy + pair expansion + pair count). Memoize the two frames per
-  // (session, corpus key, minCo): item-pair grain, localCheckpointed
-  // eagerly and MemoPin-pinned so the bench's between-query cleanup keeps
-  // the blocks. recommendationEval deliberately builds its own — its model
-  // trains on the holdout-split TRAIN relation, not this corpus. At real
-  // scale this is "the co-occurrence model is materialized once, every
-  // serving/ranking surface reads it".
-  // The key folds in the SELECTED input's plan fingerprint (round-12
-  // ADVICE): a caller reusing a corpus key with a different baskets frame
-  // — or the same frame but different basket/item columns — misses and
-  // rebuilds instead of being served the wrong model.
-  private val coMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, Int, Int),
-    (DataFrame, DataFrame)]()
+  // (session, corpus key, minCo, input fingerprint): item-pair grain,
+  // localCheckpointed eagerly. recommendationEval deliberately builds its
+  // own — its model trains on the holdout-split TRAIN relation, not this
+  // corpus. At real scale this is "the co-occurrence model is materialized
+  // once, every serving/ranking surface reads it".
+  // The fingerprint is taken over the SELECTED input: a caller reusing a
+  // corpus key with a different baskets frame — or the same frame but
+  // different basket/item columns — misses and rebuilds instead of being
+  // served the wrong model.
+  val CoStateMemo = "cf_costate"
 
   /** (itemCnt, co) through the shared memo; None builds fresh (and leaves
     * the caller's persist/caching choices untouched). */
   private def coState(baskets: DataFrame, basketCol: String, itemCol: String,
       minCo: Int, memoKey: Option[String],
       inputDistinct: Boolean = false): (DataFrame, DataFrame) = {
-    // round-13: the model needs the (basket, item)-DISTINCT relation; when
-    // the caller proves its input already is (recommendationEval's train
+    // the model needs the (basket, item)-DISTINCT relation; when the
+    // caller proves its input already is (recommendationEval's train
     // derives from a distinct frame by filtering), re-distincting is a
     // pure-waste exchange + hash-aggregate (guide §2.4) — skip it. The
     // inner coOccurrenceEdges distinct is likewise skipped for ALL coState
@@ -327,9 +325,9 @@ object Graph {
       case Some(key) =>
         // fingerprint the selected two-column view: captures both the
         // input relation and the basket/item column choice
-        val fp = graft.core.MemoPin.planFingerprint(
+        val fp = SharedState.planFingerprint(
           baskets.select(col(basketCol).as("basket"), col(itemCol).as("item")))
-        coMemo.computeIfAbsent((baskets.sparkSession, key, minCo, fp), _ => {
+        SharedState.memo(CoStateMemo, baskets.sparkSession, key, minCo, fp) {
           val b = distinctB()
           // eager localCheckpoints: materialize while b's blocks exist,
           // then release b — the memo holds only the model-grain frames
@@ -337,30 +335,9 @@ object Graph {
             .localCheckpoint(true)
           val co = coEdgesOfDistinct(b, minCo)
             .localCheckpoint(true)
-          graft.core.MemoPin.pin(itemCnt)
-          graft.core.MemoPin.pin(co)
           b.unpersist(false)
           (itemCnt, co)
-        })
-    }
-  }
-
-  /** Build the shared CF state eagerly (the bench warms this untimed at
-    * suite start; q_cf_similarity owns the build per timed iteration). */
-  def warmCoState(baskets: DataFrame, key: String, basketCol: String,
-                  itemCol: String, minCo: Int = 2): Unit =
-    coState(baskets, basketCol, itemCol, minCo, Some(key)): Unit
-
-  /** Drop this session's CF memo entries and their pinned blocks. */
-  def resetCoStateMemo(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val it = coMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) {
-        graft.core.MemoPin.unpin(e.getValue._1)
-        graft.core.MemoPin.unpin(e.getValue._2)
-        it.remove()
-      }
+        }
     }
   }
 

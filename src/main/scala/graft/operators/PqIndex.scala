@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.SharedState
 import graft.functions.VectorFunctions
 
 /** Product quantization (PQ) — the vector-compression half of IVF-PQ, the
@@ -91,8 +92,7 @@ object PqIndex {
     packed
   }
 
-  // ---- shared trained PQ codebooks (round-13; the IvfIndex.coarseMemo
-  // discipline) ----
+  // ---- shared trained PQ codebooks ----
   // Three lanes train the IDENTICAL raw-vector codebook on the same
   // embeddings table (q_vec_pq storage codes, q_vec_adc search,
   // q_sim_topk_ivfpq search), and two more train the IDENTICAL residual
@@ -105,28 +105,28 @@ object PqIndex {
   // deployment shape: the codebook is trained once per index build and
   // persisted next to the codes; search nodes load it — a query path that
   // retrains the codebook would return different codes than storage.
-  // Key: (session, basis, corpus key, nIters, training-frame fingerprint).
-  // `basis` ("raw" | "residual") exists so each OWNER lane resets only its
-  // own codebook; the plan fingerprint (round-13 memo contract) makes a
-  // reused corpus key over a different embeddings relation miss and
-  // retrain. Residual callers fingerprint their RESIDUAL frame, whose plan
-  // embeds the coarse centroid literals — bit-identical training makes
-  // owner and consumer fingerprints equal, while a different coarse basis
-  // (different nLists/corpus) misses by construction.
-  private val pqMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String, Int, Int),
-    Seq[(Column, Column)]]()
+  // Key: (basis memo, corpus key, nIters, training-frame fingerprint).
+  // One memo per basis, so each basis's owner resets only its own
+  // codebook; the plan fingerprint makes a reused corpus key over a
+  // different embeddings relation miss and retrain. Residual callers
+  // fingerprint their RESIDUAL frame, whose plan embeds the coarse
+  // centroid literals — bit-identical training makes owner and consumer
+  // fingerprints equal, while a different coarse basis (different
+  // nLists/corpus) misses by construction.
+  val RawMemo = "pq_raw"
+  val ResidualMemo = "pq_residual"
 
-  /** [[train]] through the shared-codebook memo; None trains fresh. */
+  /** [[train]] through the shared codebook of one basis ([[RawMemo]] or
+    * [[ResidualMemo]]); None trains fresh. */
   private def trainShared(frame: DataFrame, nIters: Int, basis: String,
                           memoKey: Option[String]): Seq[(Column, Column)] =
     memoKey match {
       case None => train(frame, nIters)
       case Some(key) =>
-        pqMemo.computeIfAbsent(
-          (frame.sparkSession, basis, key, nIters,
-            graft.core.MemoPin.planFingerprint(frame)),
-          _ => train(frame, nIters))
+        SharedState.memo(basis, frame.sparkSession, key, nIters,
+          SharedState.planFingerprint(frame)) {
+          train(frame, nIters)
+        }
     }
 
   /** The residual frame every residual-PQ entry point quantizes:
@@ -144,33 +144,6 @@ object PqIndex {
         (x, c) => x - c).as("embedding"))
   }
 
-  /** Train both shared codebooks eagerly (the bench warms this untimed at
-    * suite start; q_vec_pq / q_vec_rpq own the builds per timed
-    * iteration). */
-  def warmCodebooks(emb: DataFrame, key: String, nLists: Int = 8,
-                    nIters: Int = 1, warmRaw: Boolean = true,
-                    warmResidual: Boolean = true): Unit = {
-    val e = graft.core.Parallelism.forCompute(emb)
-    if (warmRaw)
-      trainShared(e, nIters, "raw", Some(key)): Unit
-    if (warmResidual) {
-      val coarse = IvfIndex.trainCoarse(e, nLists, nIters, Some(key))
-      trainShared(residualFrame(e, coarse), nIters, "residual", Some(key)): Unit
-    }
-  }
-
-  /** Drop this session's trained codebooks for one basis — the bench calls
-    * it before each timed iteration of that basis's OWNER lane. Pure
-    * driver state: nothing to unpersist. */
-  def resetPqMemo(spark: org.apache.spark.sql.SparkSession,
-                  basis: String): Unit = {
-    val it = pqMemo.keySet().iterator()
-    while (it.hasNext) {
-      val k = it.next()
-      if ((k._1 eq spark) && k._2 == basis) it.remove()
-    }
-  }
-
   /** PQ-encode every vector: seed partition + `nIters` Lloyd refinements per
     * subspace, then one narrow encoding pass. Output: `code_0..code_{M-1}`
     * (each in [0, K)) plus the nibble-packed `pq_code` — the 4-byte storage
@@ -178,7 +151,7 @@ object PqIndex {
   def codes(emb: DataFrame, nIters: Int = 1,
             memoKey: Option[String] = None): DataFrame = {
     val e = graft.core.Parallelism.forCompute(emb)
-    val packed = trainShared(e, nIters, "raw", memoKey)
+    val packed = trainShared(e, nIters, RawMemo, memoKey)
     val cs = codeExprs(packed).zipWithIndex
       .map { case (c, s) => c.cast("long").as(s"code_$s") }
     e.select(col("vec_id") +: cs: _*)
@@ -231,7 +204,7 @@ object PqIndex {
     val e = graft.core.Parallelism.forCompute(emb).persist()
     val coarse = IvfIndex.trainCoarse(e, nLists, nIters, coarseMemoKey)
     val rframe = residualFrame(e, coarse)
-    val packed = trainShared(rframe, nIters, "residual", coarseMemoKey)
+    val packed = trainShared(rframe, nIters, ResidualMemo, coarseMemoKey)
     val cs = codeExprs(packed).zipWithIndex
       .map { case (c, s) => c.cast("long").as(s"code_$s") }
     rframe.select(col("vec_id") +: col("list") +: cs: _*)
@@ -255,7 +228,7 @@ object PqIndex {
   def adcTopK(emb: DataFrame, nQueries: Int = 8, k: Int = 5,
               nIters: Int = 1, memoKey: Option[String] = None): DataFrame = {
     val e = graft.core.Parallelism.forCompute(emb)
-    val packed = trainShared(e, nIters, "raw", memoKey)
+    val packed = trainShared(e, nIters, RawMemo, memoKey)
     val cs = codeExprs(packed).zipWithIndex
       .map { case (c, s) => c.cast("long").as(s"code_$s") }
     val corpus = e.select(col("vec_id").as("n_id") +: cs: _*)
@@ -351,7 +324,7 @@ object PqIndex {
     val coarse @ (matrix, listIds) =
       IvfIndex.trainCoarse(e, nLists, nIters, coarseMemoKey)
     val rframe = residualFrame(e, coarse)
-    val packed = trainShared(rframe, nIters, "residual", coarseMemoKey)
+    val packed = trainShared(rframe, nIters, ResidualMemo, coarseMemoKey)
     val cs = codeExprs(packed).zipWithIndex
       .map { case (c, s) => c.cast("long").as(s"code_$s") }
     val corpus = rframe.select(col("vec_id").as("n_id") +: col("list") +: cs: _*)
@@ -420,7 +393,7 @@ object PqIndex {
     val e = graft.core.Parallelism.forCompute(emb).persist()
     val coarse = IvfIndex.trainCoarse(e, nLists, nIters, coarseMemoKey)
     val probes = IvfIndex.probes(e, coarse, nQueries, nProbe)
-    val packed = trainShared(e, nIters, "raw", coarseMemoKey)
+    val packed = trainShared(e, nIters, RawMemo, coarseMemoKey)
     val cs = codeExprs(packed).zipWithIndex
       .map { case (c, s) => c.cast("long").as(s"code_$s") }
     val corpus = e.select(

@@ -58,13 +58,13 @@ class EditDistanceSpec extends SparkSpec {
 
   test("shared pair-table memo: warm == fresh for pairs and survivors, reset forgets") {
     val docs = graft.sources.Tables.documents(spark, sf)
-    NearDup.resetEditDistanceMemo(spark)
+    graft.core.SharedState.reset(spark, NearDup.EditDistanceMemo)
     val fresh = NearDup.editDistancePairs(docs)
       .orderBy("a_id", "b_id").collect().toSeq
     val freshSurv = Dedup.clusterSurvivors(docs.select("doc_id"),
         NearDup.editDistancePairs(docs).select("a_id", "b_id"))
       .orderBy("doc_id").collect().toSeq
-    NearDup.warmEditDistancePairs(docs, key = "spec-ed")
+    NearDup.editDistancePairs(docs, memoKey = Some("spec-ed")): Unit
     assert(NearDup.editDistancePairs(docs, memoKey = Some("spec-ed"))
       .orderBy("a_id", "b_id").collect().toSeq == fresh)
     assert(Dedup.clusterSurvivors(docs.select("doc_id"),
@@ -72,7 +72,7 @@ class EditDistanceSpec extends SparkSpec {
           .select("a_id", "b_id"))
       .orderBy("doc_id").collect().toSeq == freshSurv)
     assert(fresh.nonEmpty && freshSurv.nonEmpty)
-    NearDup.resetEditDistanceMemo(spark)
+    graft.core.SharedState.reset(spark, NearDup.EditDistanceMemo)
   }
 
   test("pair exchange carries no document text (ids+fingerprints only)") {

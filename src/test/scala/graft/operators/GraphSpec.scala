@@ -7,7 +7,7 @@ class GraphSpec extends SparkSpec {
   import spark.implicits._
 
   test("shared co-purchase edge CTE: memoized frame identical to the direct derivation") {
-    graft.SparkEntry.resetCoPurchaseEdges(spark)
+    graft.core.SharedState.reset(spark, graft.SparkEntry.CoPurchaseEdgesMemo)
     val memo = graft.SparkEntry.coPurchaseEdges(spark, sf)
       .orderBy("item_a", "item_b").collect().toSeq
     val direct = Graph.coOccurrenceEdges(
@@ -19,7 +19,7 @@ class GraphSpec extends SparkSpec {
     // a second call is a memo hit — the same checkpointed frame object
     assert(graft.SparkEntry.coPurchaseEdges(spark, sf) eq
       graft.SparkEntry.coPurchaseEdges(spark, sf))
-    graft.SparkEntry.resetCoPurchaseEdges(spark)
+    graft.core.SharedState.reset(spark, graft.SparkEntry.CoPurchaseEdgesMemo)
   }
 
   test("shared CF co-occurrence memo: warm == fresh for both consumers, reset forgets") {
@@ -29,10 +29,10 @@ class GraphSpec extends SparkSpec {
           .select("l_orderkey", "l_suppkey"),
         col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-    Graph.resetCoStateMemo(spark)
+    graft.core.SharedState.reset(spark, Graph.CoStateMemo)
     val simFresh = Graph.itemSimilarity(b, "cust", "supp").collect().toSeq
     val recFresh = Graph.recommendations(b, "cust", "supp").collect().toSeq
-    Graph.warmCoState(b, key = "spec-cf", basketCol = "cust", itemCol = "supp")
+    Graph.itemSimilarity(b, "cust", "supp", memoKey = Some("spec-cf")): Unit
     // the memoized model is the same deterministic pair/count state, so
     // both consumers must match fresh builds row for row, doubles included
     assert(Graph.itemSimilarity(b, "cust", "supp", memoKey = Some("spec-cf"))
@@ -40,7 +40,7 @@ class GraphSpec extends SparkSpec {
     assert(Graph.recommendations(b, "cust", "supp", memoKey = Some("spec-cf"))
       .collect().toSeq == recFresh)
     assert(simFresh.nonEmpty && recFresh.nonEmpty)
-    Graph.resetCoStateMemo(spark)
+    graft.core.SharedState.reset(spark, Graph.CoStateMemo)
   }
 
   test("marketBasket: counts, confidence, and lift match hand computation") {

@@ -247,7 +247,7 @@ class NearDupSimSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf)
     val fresh = IvfIndex.assignments(emb, nLists = 8)
       .orderBy("vec_id").collect().toSeq
-    IvfIndex.warmCoarse(emb, key = "spec-memo")
+    IvfIndex.assignments(emb, memoKey = Some("spec-memo")): Unit
     // decimal-exact training makes the memoized quantizer bit-identical,
     // so every consumer path reads the same entry and agrees with fresh
     val warm = IvfIndex.assignments(emb, nLists = 8, memoKey = Some("spec-memo"))
@@ -258,7 +258,7 @@ class NearDupSimSpec extends SparkSpec {
     assert(Similarity.semanticNearDupPairs(emb, 0.4,
         coarseMemoKey = Some("spec-memo")).collect().toSeq ==
       Similarity.semanticNearDupPairs(emb, 0.4).collect().toSeq)
-    IvfIndex.resetCoarseMemo(spark)
+    graft.core.SharedState.reset(spark, IvfIndex.CoarseMemo)
   }
 
   test("IVF multi-iteration Lloyd is deterministic and partition-invariant") {

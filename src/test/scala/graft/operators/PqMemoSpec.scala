@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * (basis, corpus), served to every consumer entry point. Results must be
   * bit-identical to memo-less training — the memo elides work, never
   * changes answers — and a reused corpus key over a DIFFERENT relation
-  * must miss (the [[graft.core.MemoPin]] fingerprint contract). */
+  * must miss (the [[graft.core.SharedState]] fingerprint contract). */
 class PqMemoSpec extends SparkSpec {
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
@@ -36,9 +36,9 @@ class PqMemoSpec extends SparkSpec {
         == freshIvfrpq)
       assert(rows(PqIndex.codes(emb, memoKey = Some(key))) == freshCodes)
     } finally {
-      PqIndex.resetPqMemo(spark, "raw")
-      PqIndex.resetPqMemo(spark, "residual")
-      IvfIndex.resetCoarseMemo(spark)
+      graft.core.SharedState.reset(spark, PqIndex.RawMemo)
+      graft.core.SharedState.reset(spark, PqIndex.ResidualMemo)
+      graft.core.SharedState.reset(spark, IvfIndex.CoarseMemo)
     }
   }
 
@@ -56,7 +56,7 @@ class PqMemoSpec extends SparkSpec {
       assert(memoShifted == rows(PqIndex.codes(shifted)))
       // and the original entry still serves the original corpus
       assert(rows(PqIndex.codes(emb, memoKey = Some(key))) == memoFirst)
-    } finally PqIndex.resetPqMemo(spark, "raw")
+    } finally graft.core.SharedState.reset(spark, PqIndex.RawMemo)
   }
 
   test("warmCodebooks pre-trains both bases: owner and consumer results " +
@@ -64,15 +64,16 @@ class PqMemoSpec extends SparkSpec {
     val key = "pq-memo-spec-warm"
     try {
       val emb = Tables.embeddings(spark, sf)
-      PqIndex.warmCodebooks(emb, key)
+      PqIndex.codes(emb, memoKey = Some(key)): Unit
+      PqIndex.residualCodes(emb, coarseMemoKey = Some(key)): Unit
       assert(rows(PqIndex.codes(emb, memoKey = Some(key)))
         == rows(PqIndex.codes(emb)))
       assert(rows(PqIndex.ivfrpqTopK(emb, coarseMemoKey = Some(key)))
         == rows(PqIndex.ivfrpqTopK(emb)))
     } finally {
-      PqIndex.resetPqMemo(spark, "raw")
-      PqIndex.resetPqMemo(spark, "residual")
-      IvfIndex.resetCoarseMemo(spark)
+      graft.core.SharedState.reset(spark, PqIndex.RawMemo)
+      graft.core.SharedState.reset(spark, PqIndex.ResidualMemo)
+      graft.core.SharedState.reset(spark, IvfIndex.CoarseMemo)
     }
   }
 }

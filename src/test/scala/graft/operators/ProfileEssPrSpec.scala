@@ -56,10 +56,10 @@ class ProfileEssPrSpec extends SparkSpec {
 
   test("shared exact-profile memo: warm == fresh for both lanes, reset forgets") {
     val li = graft.sources.Tables.lineitem(spark, sf)
-    Profile.resetProfileMemo(spark)
+    graft.core.SharedState.reset(spark, Profile.ProfileMemo)
     val fresh = Profile.tableProfile(li).collect().toSeq
     val freshApprox = Profile.tableProfileApprox(li).collect().toSeq
-    Profile.warmProfile(li, key = "spec-profile")
+    Profile.tableProfile(li, memoKey = Some("spec-profile")): Unit
     // the memo holds the checkpointed exact profile; both consumers must
     // match their fresh builds row for row (the approx lane's ground-truth
     // columns come straight from the memoized frame)
@@ -70,7 +70,7 @@ class ProfileEssPrSpec extends SparkSpec {
     // a second memoized call is a hit — the same checkpointed frame object
     assert(Profile.tableProfile(li, memoKey = Some("spec-profile")) eq
       Profile.tableProfile(li, memoKey = Some("spec-profile")))
-    Profile.resetProfileMemo(spark)
+    graft.core.SharedState.reset(spark, Profile.ProfileMemo)
   }
 
   test("prCurve: two clean bins — exact precision/recall/F1 ladder") {
